@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, input_file_name, lit}
+import org.apache.spark.sql.types.StructType
 
 /** A minimal but real table-format transaction log — the self-contained
   * stand-in for the Delta log the reference materializes 197 models on
@@ -356,11 +357,15 @@ object TxLog {
     * snapshots inline the file→value map into the plan (codegen'd, no join);
     * large ones broadcast-join the manifest — constant-size plans at any
     * file count, the same shape Delta's own scan uses (partition values ride
-    * the file index, not the plan). */
+    * the file index, not the plan). `dataSchema`, when given, is the schema
+    * the files are read with (no footer inference; a column absent from a
+    * file reads as null). */
   def readSubset(spark: SparkSession, table: Path, files: Seq[AddFile],
                  partitionCols: Seq[String],
-                 inlineThreshold: Int = inlinePartitionMapThreshold): DataFrame = {
-    val base = spark.read.parquet(files.map(f => table.resolve(f.path).toString): _*)
+                 inlineThreshold: Int = inlinePartitionMapThreshold,
+                 dataSchema: Option[StructType] = None): DataFrame = {
+    val base = dataSchema.fold(spark.read)(spark.read.schema)
+      .parquet(files.map(f => table.resolve(f.path).toString): _*)
     if (partitionCols.isEmpty) base
     else if (files.size <= inlineThreshold)
       partitionCols.foldLeft(base) { (df, c) =>

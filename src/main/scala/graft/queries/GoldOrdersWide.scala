@@ -16,9 +16,11 @@ import graft.runtime._
   *  - four ROW_NUMBER numberings (gold_orders.sql:22-68 device/product/user/
   *    real_user numbering; numbering CTEs are deliberately UNfiltered in
   *    incremental runs so the global order numbers stay stable — same as the
-  *    reference). r18: fused into one multi-window CTE equivalent to the
-  *    reference's LEFT JOIN USING chain of four scans (see the `numbers`
-  *    comment); the oracle still computes the original four-CTE join form;
+  *    reference), each its own CTE over a scan of orders, joined back
+  *    together by the `numbers` CTE's `LEFT JOIN … USING (order_id)` chain —
+  *    the reference's shape, which the oracle computes too (a fusion into
+  *    one multi-window CTE serialized the four window sorts and measured
+  *    slower, so it was reverted);
   *  - a JSON-guard CTE marking flagged entities
   *    (gold_orders.sql:70-82 merchant_order_notes / pickup_fault, map access
   *    re-expressed over the events props JSON);

@@ -124,56 +124,32 @@ final class DagRunner(models: Seq[Model]) {
         "snapshot models need var 'run_ts' or 'start_date_ymd' for deterministic SCD2 effective timestamps"))
 
   def materialize(ctx: Ctx, m: Model, fullRefresh: Boolean = false): Unit = {
-    // file_format='delta' routes through the transaction-log table format
-    // when the warehouse opts in (snapshots keep the parquet path — their
-    // full-table rewrite already commits atomically via replaceTable)
-    val asLog = ctx.warehouse.logFormatEnabled && m.fileFormat == "delta"
+    val wh = ctx.warehouse
+    // file_format picks the table format of every write below, snapshots
+    // included (all 54 reference snapshots are delta, so SCD2 advances
+    // commit atomically with history, like Delta's snapshot MERGE)
+    wh.declareFileFormat(m.name, m.fileFormat)
+    def rebuildOr(partitionBy: Seq[String], spread: Option[(String, Int)] = None)
+                 (incremental: org.apache.spark.sql.DataFrame => Unit): Unit =
+      if (fullRefresh || !wh.tableExists(m.name))
+        wh.createTable(m.name, m.build(ctx.copy(isIncremental = false)), partitionBy, spread)
+      else incremental(m.build(ctx.copy(isIncremental = true)))
     m.materialization match {
     case Materialization.Table(partitionBy, orderBy) =>
-      if (asLog) ctx.warehouse.createTableLog(m.name, m.build(ctx), partitionBy, None, orderBy)
-      else ctx.warehouse.createTable(m.name, m.build(ctx), partitionBy, None, orderBy)
+      wh.createTable(m.name, m.build(ctx), partitionBy, None, orderBy)
     case Materialization.View =>
       // builder-backed: the view plan re-derives after upstream table
       // mutations (a captured DataFrame pins stale file listings)
-      ctx.warehouse.registerView(m.name, () => m.build(ctx))
+      wh.registerView(m.name, () => m.build(ctx))
     case Materialization.IncrementalInsertOverwrite(partitionBy, onSchemaChange, spread) =>
-      if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
-        if (asLog) ctx.warehouse.createTableLog(m.name,
-          m.build(ctx.copy(isIncremental = false)), partitionBy, spread)
-        else ctx.warehouse.createTable(m.name, m.build(ctx.copy(isIncremental = false)),
-          partitionBy, spread)
-      } else if (asLog)
-        ctx.warehouse.insertOverwritePartitionsLog(m.name,
-          m.build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
-      else
-        ctx.warehouse.insertOverwritePartitions(m.name,
-          m.build(ctx.copy(isIncremental = true)), partitionBy, onSchemaChange, spread)
+      rebuildOr(partitionBy, spread)(
+        wh.insertOverwritePartitions(m.name, _, partitionBy, onSchemaChange, spread))
     case Materialization.IncrementalMerge(uniqueKey, partitionBy, onSchemaChange, incOnly) =>
-      if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
-        if (asLog) ctx.warehouse.createTableLog(m.name,
-          m.build(ctx.copy(isIncremental = false)), partitionBy)
-        else ctx.warehouse.createTable(m.name, m.build(ctx.copy(isIncremental = false)), partitionBy)
-      } else if (asLog)
-        ctx.warehouse.mergeUpsertLog(m.name,
-          m.build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
-      else
-        ctx.warehouse.mergeUpsert(m.name,
-          m.build(ctx.copy(isIncremental = true)), uniqueKey, partitionBy, onSchemaChange, incOnly)
+      rebuildOr(partitionBy)(
+        wh.mergeUpsert(m.name, _, uniqueKey, partitionBy, onSchemaChange, incOnly))
     case Materialization.IncrementalAppend(partitionBy) =>
-      if (fullRefresh || !ctx.warehouse.tableExists(m.name)) {
-        if (asLog) ctx.warehouse.createTableLog(m.name,
-          m.build(ctx.copy(isIncremental = false)), partitionBy)
-        else ctx.warehouse.createTable(m.name, m.build(ctx.copy(isIncremental = false)), partitionBy)
-      } else if (asLog)
-        ctx.warehouse.appendLog(m.name, m.build(ctx.copy(isIncremental = true)), partitionBy)
-      else
-        ctx.warehouse.append(m.name, m.build(ctx.copy(isIncremental = true)), partitionBy)
+      rebuildOr(partitionBy)(wh.append(m.name, _, partitionBy))
     case Materialization.Snapshot(uniqueKey, strategy, invalidateHardDeletes) =>
-      // snapshots write through Scd2's format-agnostic createTable/
-      // replaceTable; route them onto the log when the model is delta
-      // (all 54 reference snapshots are) so SCD2 advances commit atomically
-      // with history, like Delta's snapshot MERGE
-      if (asLog) ctx.warehouse.routeAsLog(m.name)
       Scd2.snapshot(ctx, m.name, m.build(ctx), uniqueKey, strategy,
         invalidateHardDeletes, runTs(ctx))
     }

@@ -1,7 +1,6 @@
 package graft.runtime
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,7 +10,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * metastore + S3 warehouse (reference: CTAS through
   * macros/spark_adapter_patch/create_table.sql:23-43).
   *
-  * Tables are parquet directories under `root`; views are named lazy plans.
+  * Views are named lazy plans. Tables are parquet directories under `root`
+  * or, for models declaring `file_format='delta'` on a warehouse with
+  * `logFormatEnabled`, [[graft.plans.TxLog]] transaction logs. That choice
+  * is made in one place, `writeFormat`; reads follow what is on disk
+  * ([[isLogBacked]]). Each public write method runs the format-independent
+  * steps once, then calls the format for the physical write.
+  *
   * A `_schema.json` sidecar pins each table's canonical column set so
   * `on_schema_change` policies (sync/append/ignore) work over immutable
   * parquet files: reads merge file schemas, then project to the canonical
@@ -79,11 +84,11 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * into last pass's files). */
   def drop(name: String): Unit = {
     views.remove(name)
-    // a dropped name must also forget its log routing — a later plain
-    // createTable for the same name (e.g. a materialization change across
-    // corpus fixpoint passes) would otherwise silently write a
-    // transaction-log table instead of parquet
-    logRouted.remove(name)
+    // a dropped name must also forget its declared format — a later
+    // undeclared createTable for the same name (e.g. a materialization
+    // change across corpus fixpoint passes) would otherwise silently write
+    // a transaction-log table instead of parquet
+    declaredLog.remove(name)
     noteMutation()
     val p = Paths.get(tablePath(name))
     if (Files.exists(p)) TempDirs.deleteTree(p)
@@ -94,30 +99,15 @@ final class Warehouse(val spark: SparkSession, val root: String,
     catch { case scala.util.control.NonFatal(_) => }
   }
 
-  /** Read a managed table or view. Tables with a `_schema.json` sidecar are
-    * read with that canonical schema applied directly — no per-file footer
-    * sweep (`mergeSchema`), which at 100TB is a full listing+footer read per
-    * query for information the engine already persisted. The parquet reader
-    * null-fills columns absent from older files (append_new_columns) and
-    * ignores file columns outside the canonical set (ignore policy), which is
-    * exactly what the old merge-then-project path computed. Only sidecar-less
-    * directories (externally created) fall back to mergeSchema. */
+  /** Read a managed table or view. A table is read in the format it is
+    * stored in ([[isLogBacked]]), projected to its canonical schema. */
   def read(name: String): DataFrame = views.get(name) match {
     case Some(v) =>
       if (v.epoch != mutationEpoch) v.build.foreach { b =>
         v.df = b(); v.epoch = mutationEpoch
       }
       v.df
-    case None if isLogBacked(name) => readLogCanonical(name)
-    case None =>
-      canonicalSchema(name) match {
-        case Some(schema) =>
-          // partition columns surface last regardless of the given schema;
-          // project back to canonical order (no extra I/O, plan-only)
-          spark.read.schema(schema).parquet(dataDir(name))
-            .select(schema.fieldNames.toSeq.map(col): _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(dataDir(name))
-      }
+    case None => (if (isLogBacked(name)) LogFormat else ParquetDirs).read(name)
   }
 
   def canonicalSchema(name: String): Option[StructType] = {
@@ -155,25 +145,30 @@ final class Warehouse(val spark: SparkSession, val root: String,
           (cols.map(col) :+ (abs(hash(col(spreadCol))) % n)): _*)
     }
 
+  /** Names whose declared `file_format` maps to the transaction log. */
+  private val declaredLog = scala.collection.concurrent.TrieMap.empty[String, Unit]
+
+  /** State a model's `file_format` before writing it. `delta` maps to the
+    * transaction log when the warehouse has `logFormatEnabled`; any other
+    * format, and any name never declared (seeds, direct callers), writes
+    * parquet. The declaration holds for every later write of the name —
+    * including the createTable/replaceTable calls the SCD2 snapshot makes —
+    * until the name is declared again or dropped. */
+  def declareFileFormat(name: String, fileFormat: String): Unit =
+    if (logFormatEnabled && fileFormat == "delta") declaredLog.put(name, ())
+    else declaredLog.remove(name)
+
+  private def writeFormat(name: String): TableFormat =
+    if (declaredLog.contains(name)) LogFormat else ParquetDirs
+
   /** Full-rebuild CTAS (reference: materialized='table').
     *
     * @param orderBy global ORDER BY sink (reference: ~690 cosmetic trailing
     *   `ORDER BY` sites): range-partition + per-partition sort, so part files
     *   hold disjoint ordered ranges in file-name order. */
-  /** Tables routed to the transaction-log format by the caller that knows
-    * the model's file_format but writes through format-agnostic helpers —
-    * the SCD2 snapshot path (all 54 reference snapshots are
-    * `file_format='delta'`). createTable/replaceTable on a routed name
-    * delegate to the log equivalents; reads auto-route via isLogBacked. */
-  private val logRouted = scala.collection.concurrent.TrieMap.empty[String, Unit]
-  def routeAsLog(name: String): Unit = logRouted.put(name, ())
-
   def createTable(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
                   hashSpread: Option[(String, Int)] = None,
                   orderBy: Seq[String] = Nil): Unit = {
-    if (logRouted.contains(name)) {
-      createTableLog(name, df, partitionBy, hashSpread, orderBy); return
-    }
     noteMutation()
     // persisted docs survive a full rebuild (reference persists comments
     // across runs); SaveMode.Overwrite wipes the directory incl. the sidecar.
@@ -185,8 +180,7 @@ final class Warehouse(val spark: SparkSession, val root: String,
       val out =
         if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
         else distributeForWrite(df, partitionBy, hashSpread)
-      val w = out.write.mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dataDir(name))
+      writeFormat(name).overwrite(name, out, partitionBy)
       writeSchema(name, df.schema)
     } finally {
       val survivors = savedDocs.filter { case (k, _) =>
@@ -205,49 +199,21 @@ final class Warehouse(val spark: SparkSession, val root: String,
                                 onSchemaChange: OnSchemaChange,
                                 hashSpread: Option[(String, Int)] = None): Unit = {
     noteMutation()
-    if (partitionBy.isEmpty) {
-      // dbt-spark semantics: insert_overwrite without partition_by replaces
-      // the whole table (reference: dsa_orders.sql declares exactly this)
-      createTable(name, alignSchema(name, df, onSchemaChange))
-      return
-    }
     val aligned = alignSchema(name, df, onSchemaChange)
-    val out = distributeForWrite(aligned, partitionBy, hashSpread)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(dataDir(name))
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // dbt-spark semantics: insert_overwrite without partition_by replaces
+    // the whole table (reference: dsa_orders.sql declares exactly this)
+    if (partitionBy.isEmpty) createTable(name, aligned)
+    else writeFormat(name).overwritePartitions(name,
+      distributeForWrite(aligned, partitionBy, hashSpread), partitionBy)
   }
 
-  /** Key-based upsert — the parquet-native equivalent of the Delta `MERGE
-    * INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
-    * that backs the reference's 197 delta-format models (reference:
+  /** Key-based upsert — the engine's equivalent of the Delta `MERGE INTO …
+    * WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` that
+    * backs the reference's 197 delta-format models (reference:
     * macros/spark_adapter_patch/create_table.sql:29-34 `create or replace
     * table … using delta`; dbt-spark's incremental_strategy='merge' emits the
-    * MERGE above for delta relations).
-    *
-    * Rewrite granularity is the partition directory — one level coarser than
-    * Delta's file-level rewrite, the best parquet-over-FS can do:
-    *  1. probe which partitions are affected: partitions carrying incoming
-    *     rows, plus partitions holding an existing row whose key is being
-    *     replaced (covers a key MOVING partitions — Delta's matched-update
-    *     also relocates the row);
-    *  2. scan ONLY those partition directories (the `isin`-style literal
-    *     predicate below prunes at listing time), anti-join out replaced keys;
-    *  3. dynamic-partition-overwrite survivors ∪ increment, and drop any
-    *     affected directory that ends up with zero rows (a fully-replaced
-    *     partition absent from the output would otherwise be left stale —
-    *     dynamic overwrite only touches partitions present in the write).
-    *
-    * Scale shape: the key probe is a key-only semi-join (broadcast when the
-    * increment is small, AQE otherwise); the collected affected-partition list
-    * is bounded by partition count, the same driver-side bookkeeping Spark's
-    * own dynamic partition overwrite does. Unpartitioned tables fall back to
-    * a full rewrite — documented cost, same as Delta MERGE with no pruning
-    * predicate matching every file.
+    * MERGE above for delta relations). The rewrite itself is the format's:
+    * partition directories on parquet, files on the log.
     *
     * Contract (same as dbt merge): the increment must be unique on
     * `uniqueKey`; reference models guarantee this with their ROW_NUMBER dedup
@@ -260,54 +226,161 @@ final class Warehouse(val spark: SparkSession, val root: String,
     // dbt-spark merge without unique_key is insert-only (WHEN NOT MATCHED
     // INSERT): nothing can match, so it degrades to append (reference
     // archetype: models/spark/junk2/dbt_test.sql — bare incremental config)
-    if (uniqueKey.isEmpty) {
-      if (tableExists(name)) append(name, alignSchema(name, df, onSchemaChange), partitionBy)
-      else createTable(name, df, partitionBy)
-      return
+    if (!tableExists(name)) createTable(name, df, partitionBy)
+    else if (uniqueKey.isEmpty) append(name, alignSchema(name, df, onSchemaChange), partitionBy)
+    else writeFormat(name).merge(name, alignSchema(name, df, onSchemaChange), uniqueKey,
+      partitionBy, incrementPartitionsOnly)
+  }
+
+  /** Row append (reference: incremental_strategy='append'). */
+  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
+    noteMutation()
+    writeFormat(name).append(name, alignSchema(name, df, OnSchemaChange.Ignore), partitionBy)
+  }
+
+  /** Atomic full replace used by SCD2 rewrites: the format publishes the
+    * whole new table, schema sidecar included, in one commit. */
+  def replaceTable(name: String, df: DataFrame): Unit = {
+    noteMutation()
+    writeFormat(name).replace(name, df)
+  }
+
+  /** The steps whose bodies differ between the two table formats. Frames
+    * arrive aligned to the canonical schema (and, for overwrites,
+    * distributed for the write); the public methods above own every
+    * format-independent step. */
+  private sealed trait TableFormat {
+    def read(name: String): DataFrame
+    def overwrite(name: String, out: DataFrame, partitionBy: Seq[String]): Unit
+    /** Replace the whole table and publish `df`'s schema sidecar with it. */
+    def replace(name: String, df: DataFrame): Unit
+    def overwritePartitions(name: String, out: DataFrame, partitionBy: Seq[String]): Unit
+    def append(name: String, df: DataFrame, partitionBy: Seq[String]): Unit
+    def merge(name: String, aligned: DataFrame, uniqueKey: Seq[String],
+              partitionBy: Seq[String], incrementPartitionsOnly: Boolean): Unit
+  }
+
+  private object ParquetDirs extends TableFormat {
+    /** Tables with a `_schema.json` sidecar are read with that canonical
+      * schema applied directly — no per-file footer sweep (`mergeSchema`),
+      * which at 100TB is a full listing+footer read per query for
+      * information the engine already persisted. The parquet reader
+      * null-fills columns absent from older files (append_new_columns) and
+      * ignores file columns outside the canonical set (ignore policy), which
+      * is exactly what the old merge-then-project path computed. Only
+      * sidecar-less directories (externally created) fall back to
+      * mergeSchema. */
+    def read(name: String): DataFrame = canonicalSchema(name) match {
+      case Some(schema) =>
+        // partition columns surface last regardless of the given schema;
+        // project back to canonical order (no extra I/O, plan-only)
+        spark.read.schema(schema).parquet(dataDir(name))
+          .select(schema.fieldNames.toSeq.map(col): _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(dataDir(name))
     }
-    if (!tableExists(name)) { createTable(name, df, partitionBy); return }
-    val aligned = alignSchema(name, df, onSchemaChange)
-    val keys = aligned.select(uniqueKey.map(col): _*).distinct()
-    if (partitionBy.isEmpty) {
-      // read(name) is constructed only on the paths that scan the whole
-      // table: building the DataFrame lists every file eagerly, which the
-      // 100× probe measured as the dominant merge term at 7,700 partitions
-      val survivors = read(name).join(keys, uniqueKey, "left_anti")
-      replaceTable(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
-      return
+
+    private def write(name: String, df: DataFrame, mode: SaveMode,
+                      partitionBy: Seq[String]): Unit = {
+      val w = df.write.mode(mode)
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dataDir(name))
     }
-    val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
-      incrementPartitionsOnly)
-    // partitions still present after the merge; the rest of `affected` must
-    // have their directories dropped explicitly
-    // stage the merged slice before overwriting: Spark (correctly) refuses a
-    // plan that overwrites the same directory it reads, and `out` reads the
-    // affected partitions of the target. Double-writes only the affected
-    // partitions, not the table.
-    // not dot-prefixed: Spark's file listing treats dot/underscore paths as
-    // hidden, which risks the staged read silently resolving to zero files
-    val staging = s"$root/merge-staging-tmp/${namer(name)}"
-    out.write.mode(SaveMode.Overwrite).parquet(staging)
-    val outParts =
-      try {
-        val staged = spark.read.schema(out.schema).parquet(staging)
-        insertOverwritePartitions(name, staged, partitionBy, OnSchemaChange.Ignore)
-        staged.select(partitionBy.map(col): _*).distinct().collect()
-          .map(r => partitionBy.indices.map(r.get)).toSet
-      } finally {
-        deleteRecursively(Paths.get(staging))
-        val parent = Paths.get(staging).getParent
-        if (Files.exists(parent)) {
-          val listing = Files.list(parent)
-          val empty = try !listing.findAny().isPresent finally listing.close()
-          if (empty) Files.delete(parent)
+
+    def overwrite(name: String, out: DataFrame, partitionBy: Seq[String]): Unit =
+      write(name, out, SaveMode.Overwrite, partitionBy)
+
+    /** Stage to a tmp dir, then swap. (Prod-grade would use Delta/Iceberg
+      * commit protocols; parquet + rename is the local-FS equivalent —
+      * SURVEY.md §7 "SCD2 without Delta".) */
+    def replace(name: String, df: DataFrame): Unit = {
+      val tmp = s"$root/.staging_$name"
+      df.write.mode(SaveMode.Overwrite).parquet(tmp)
+      // the schema sidecar ships INSIDE the staged directory, so the commit
+      // publishes a complete table (no post-flip sidecar write a concurrent
+      // reader could miss); underscore-prefixed files are invisible to
+      // Spark's listing, so the staged dir stays a valid parquet directory
+      Files.writeString(Paths.get(tmp, "_schema.json"), df.schema.json)
+      // the publish step is the pluggable commit point (see
+      // [[TableCommitProtocol]] — a Delta/Iceberg log-append drops in here)
+      commitProtocol.commitReplace(Paths.get(tmp), Paths.get(tablePath(name)))
+    }
+
+    def overwritePartitions(name: String, out: DataFrame, partitionBy: Seq[String]): Unit = {
+      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try write(name, out, SaveMode.Overwrite, partitionBy)
+      finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
+        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      }
+    }
+
+    def append(name: String, df: DataFrame, partitionBy: Seq[String]): Unit =
+      write(name, df, SaveMode.Append, partitionBy)
+
+    /** Rewrite granularity is the partition directory — one level coarser
+      * than Delta's file-level rewrite, the best parquet-over-FS can do:
+      *  1. probe which partitions are affected: partitions carrying incoming
+      *     rows, plus partitions holding an existing row whose key is being
+      *     replaced (covers a key MOVING partitions — Delta's matched-update
+      *     also relocates the row);
+      *  2. scan ONLY those partition directories (the `isin`-style literal
+      *     predicate below prunes at listing time), anti-join out replaced
+      *     keys;
+      *  3. dynamic-partition-overwrite survivors ∪ increment, and drop any
+      *     affected directory that ends up with zero rows (a fully-replaced
+      *     partition absent from the output would otherwise be left stale —
+      *     dynamic overwrite only touches partitions present in the write).
+      *
+      * Scale shape: the key probe is a key-only semi-join (broadcast when
+      * the increment is small, AQE otherwise); the collected
+      * affected-partition list is bounded by partition count, the same
+      * driver-side bookkeeping Spark's own dynamic partition overwrite does.
+      * Unpartitioned tables fall back to a full rewrite — documented cost,
+      * same as Delta MERGE with no pruning predicate matching every file. */
+    def merge(name: String, aligned: DataFrame, uniqueKey: Seq[String],
+              partitionBy: Seq[String], incrementPartitionsOnly: Boolean): Unit = {
+      if (partitionBy.isEmpty) {
+        // read(name) is constructed only on the paths that scan the whole
+        // table: building the DataFrame lists every file eagerly, which the
+        // 100× probe measured as the dominant merge term at 7,700 partitions
+        val keys = aligned.select(uniqueKey.map(col): _*).distinct()
+        val survivors = read(name).join(keys, uniqueKey, "left_anti")
+        replace(name, aligned.unionByName(survivors.select(aligned.columns.map(col).toSeq: _*)))
+        return
+      }
+      val (out, affected) = mergeSlice(name, aligned, uniqueKey, partitionBy,
+        incrementPartitionsOnly)
+      // partitions still present after the merge; the rest of `affected` must
+      // have their directories dropped explicitly
+      // stage the merged slice before overwriting: Spark (correctly) refuses a
+      // plan that overwrites the same directory it reads, and `out` reads the
+      // affected partitions of the target. Double-writes only the affected
+      // partitions, not the table.
+      // not dot-prefixed: Spark's file listing treats dot/underscore paths as
+      // hidden, which risks the staged read silently resolving to zero files
+      val staging = s"$root/merge-staging-tmp/${namer(name)}"
+      out.write.mode(SaveMode.Overwrite).parquet(staging)
+      val outParts =
+        try {
+          val staged = spark.read.schema(out.schema).parquet(staging)
+          insertOverwritePartitions(name, staged, partitionBy, OnSchemaChange.Ignore)
+          staged.select(partitionBy.map(col): _*).distinct().collect()
+            .map(r => partitionBy.indices.map(r.get)).toSet
+        } finally {
+          TempDirs.deleteTree(Paths.get(staging))
+          val parent = Paths.get(staging).getParent
+          if (Files.exists(parent)) {
+            val listing = Files.list(parent)
+            val empty = try !listing.findAny().isPresent finally listing.close()
+            if (empty) Files.delete(parent)
+          }
         }
-      }
-    affected.filterNot(r => outParts.contains(partitionBy.indices.map(r.get)))
-      .foreach { r =>
-        val p = Paths.get(dataDir(name), partitionDir(partitionBy, r))
-        if (Files.exists(p)) deleteRecursively(p)
-      }
+      affected.filterNot(r => outParts.contains(partitionBy.indices.map(r.get)))
+        .foreach { r =>
+          val p = Paths.get(dataDir(name), partitionDir(partitionBy, r))
+          if (Files.exists(p)) TempDirs.deleteTree(p)
+        }
+    }
   }
 
   /** `col=value/...` relative path of one partition, hive-escaped.
@@ -425,14 +498,6 @@ final class Warehouse(val spark: SparkSession, val root: String,
     val survivors = readPartitionDirs(name, partitionBy, affected.toSeq)
       .join(keys, uniqueKey, "left_anti")
     (dfN.unionByName(survivors.select(dfN.columns.map(col).toSeq: _*)), affected)
-  }
-
-  /** Row append (reference: incremental_strategy='append'). */
-  def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    noteMutation()
-    val aligned = alignSchema(name, df, OnSchemaChange.Ignore)
-    val w = aligned.write.mode(SaveMode.Append)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dataDir(name))
   }
 
   /** Docs persistence (reference: persist_docs + alter_column_comment,
@@ -578,155 +643,108 @@ final class Warehouse(val spark: SparkSession, val root: String,
     * the catalog, not a bare parquet read). */
   def readBucketed(name: String): DataFrame = spark.table(name)
 
-  /** Atomic-ish full replace used by SCD2 rewrites: stage to a tmp dir, then
-    * swap. (Prod-grade would use Delta/Iceberg commit protocols; parquet +
-    * rename is the local-FS equivalent — SURVEY.md §7 "SCD2 without Delta".) */
-  def replaceTable(name: String, df: DataFrame): Unit = {
-    noteMutation()
-    if (logRouted.contains(name)) {
-      // TxLog.overwrite IS an atomic full replace (tombstone-all + add-new
-      // in one commit) — the log format's native equivalent of the staged
-      // rename below, with history/time-travel kept
-      createTableLog(name, df); return
-    }
-    val tmp = s"$root/.staging_$name"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    // the schema sidecar ships INSIDE the staged directory, so the commit
-    // publishes a complete table (no post-flip sidecar write a concurrent
-    // reader could miss); underscore-prefixed files are invisible to
-    // Spark's listing, so the staged dir stays a valid parquet directory
-    Files.writeString(Paths.get(tmp, "_schema.json"), df.schema.json)
-    // the publish step is the pluggable commit point (see
-    // [[TableCommitProtocol]] — a Delta/Iceberg log-append drops in here)
-    commitProtocol.commitReplace(Paths.get(tmp), Paths.get(tablePath(name)))
-  }
-
-  // ---- transaction-log table format (reference: file_format='delta') ----
-  //
-  // The reference declares 197 models `file_format='delta'`; when
-  // `logFormatEnabled`, DagRunner routes those materializations through the
-  // [[graft.plans.TxLog]] log instead of plain parquet directories. Same
-  // model contract (on_schema_change, dynamic-partition overwrite, merge
-  // semantics), different storage guarantees: atomic multi-partition
-  // commits, snapshot isolation via tombstones, time travel, and — for
-  // merge — FILE-level rewrite granularity (the actual Delta MERGE shape),
-  // finer than the parquet path's partition-directory rewrite. Snapshots
-  // (SCD2) stay on the parquet path: their full-table rewrite goes through
-  // [[replaceTable]]'s commit protocol, which is already atomic.
-
   def isLogBacked(name: String): Boolean =
     graft.plans.TxLog.exists(Paths.get(tablePath(name)))
 
-  private def logPath(name: String): Path = Paths.get(tablePath(name))
+  /** The transaction-log format (reference: file_format='delta'). Same model
+    * contract as parquet (on_schema_change, dynamic-partition overwrite,
+    * merge semantics), different storage guarantees: atomic multi-partition
+    * commits, snapshot isolation via tombstones, time travel and — for
+    * merge — FILE-level rewrite granularity (the actual Delta MERGE shape),
+    * finer than the parquet format's partition-directory rewrite. */
+  private object LogFormat extends TableFormat {
+    import graft.plans.TxLog
 
-  /** Log-backed read with the canonical-schema projection (partition columns
-    * come back as strings from the manifest; the cast restores their
-    * canonical types, mirroring what Spark's own partition-dir inference
-    * does for the parquet path). */
-  private def readLogCanonical(
-      name: String,
-      partitionFilter: Map[String, String] => Boolean = _ => true): DataFrame = {
-    // a 0-row materialization legitimately commits ZERO files (a dynamic
-    // overwrite of an empty frame writes no partitions), and a pruning
-    // filter can empty any snapshot — mirror the parquet path and return
-    // an empty frame with the sidecar schema instead of failing the read
-    // (the corpus EXECUTE phase reads 0-row tables constantly)
-    val p = logPath(name)
-    val snap = graft.plans.TxLog.snapshot(p)
-    val live = snap.files.filter(f => partitionFilter(f.partitionValues))
-    val base =
-      if (live.nonEmpty) graft.plans.TxLog.readSubset(spark, p, live, snap.partitionCols)
+    private def logPath(name: String): Path = Paths.get(tablePath(name))
+
+    /** Read `files` with the canonical schema's data columns, as the parquet
+      * format reads its directories (a column added by append_new_columns
+      * reads as null from older files instead of vanishing when an older
+      * file's footer is the one inferred). Partition columns come back as
+      * strings from the manifest; the canonical cast restores their types,
+      * mirroring what Spark's own partition-dir inference does for parquet. */
+    private def readFiles(name: String, files: Seq[TxLog.AddFile],
+                          partitionCols: Seq[String]): DataFrame =
+      canonicalCast(name, TxLog.readSubset(spark, logPath(name), files, partitionCols,
+        dataSchema = canonicalSchema(name).map(s =>
+          StructType(s.filterNot(f => partitionCols.contains(f.name))))))
+
+    def read(name: String): DataFrame = {
+      // a 0-row materialization legitimately commits ZERO files (a dynamic
+      // overwrite of an empty frame writes no partitions) — mirror the
+      // parquet format and return an empty frame with the sidecar schema
+      // instead of failing the read (the corpus EXECUTE phase reads 0-row
+      // tables constantly)
+      val snap = TxLog.snapshot(logPath(name))
+      if (snap.files.nonEmpty) readFiles(name, snap.files, snap.partitionCols)
       else canonicalSchema(name) match {
         case Some(schema) => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        case None =>
-          graft.plans.TxLog.read(spark, p, partitionFilter = partitionFilter)
+        case None => TxLog.read(spark, logPath(name))
       }
-    canonicalCast(name, base)
-  }
-
-  def createTableLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
-                     hashSpread: Option[(String, Int)] = None,
-                     orderBy: Seq[String] = Nil): Unit = {
-    noteMutation()
-    val out =
-      if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*)
-      else distributeForWrite(df, partitionBy, hashSpread)
-    graft.plans.TxLog.overwrite(logPath(name), out, partitionBy)
-    writeSchema(name, df.schema)
-  }
-
-  def insertOverwritePartitionsLog(name: String, df: DataFrame, partitionBy: Seq[String],
-                                   onSchemaChange: OnSchemaChange,
-                                   hashSpread: Option[(String, Int)] = None): Unit = {
-    noteMutation()
-    if (partitionBy.isEmpty) { createTableLog(name, alignSchema(name, df, onSchemaChange)); return }
-    val aligned = alignSchema(name, df, onSchemaChange)
-    graft.plans.TxLog.overwritePartitions(logPath(name),
-      distributeForWrite(aligned, partitionBy, hashSpread), partitionBy)
-  }
-
-  def appendLog(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit = {
-    noteMutation()
-    graft.plans.TxLog.append(logPath(name),
-      alignSchema(name, df, OnSchemaChange.Ignore), partitionBy)
-  }
-
-  /** Delta-shaped merge: probe which FILES hold matched keys (key columns
-    * only — column-pruned), tombstone exactly those, re-add their surviving
-    * rows together with the increment, one atomic commit. Rewrite
-    * granularity is the file, not the partition directory — candidate files
-    * are still manifest-pruned to the increment's partitions under
-    * `incrementPartitionsOnly` (dbt incremental_predicates analogue). On a
-    * concurrency conflict the probe re-runs against the fresh snapshot. */
-  def mergeUpsertLog(name: String, df: DataFrame, uniqueKey: Seq[String],
-                     partitionBy: Seq[String],
-                     onSchemaChange: OnSchemaChange = OnSchemaChange.Ignore,
-                     incrementPartitionsOnly: Boolean = false): Unit = {
-    noteMutation()
-    import graft.plans.TxLog
-    if (uniqueKey.isEmpty) {
-      if (tableExists(name)) appendLog(name, df, partitionBy)
-      else createTableLog(name, df, partitionBy)
-      return
     }
-    if (!tableExists(name)) { createTableLog(name, df, partitionBy); return }
-    val aligned = alignSchema(name, df, onSchemaChange)
-    val keys = aligned.select(uniqueKey.map(col): _*).distinct()
-    val incPvs: Set[Map[String, String]] =
-      if (partitionBy.isEmpty) Set.empty
-      else aligned.select(partitionBy.map(col): _*).distinct().collect().map { r =>
-        partitionDir(partitionBy, r).split("/").toSeq.map { seg =>
-          val Array(k, v) = seg.split("=", 2); k -> v
-        }.toMap
-      }.toSet
-    var attempts = 0
-    while (attempts < 5) {
-      attempts += 1
-      val p = logPath(name)
-      val snap = TxLog.snapshot(p)
-      val candidates =
-        if (incrementPartitionsOnly && partitionBy.nonEmpty)
-          snap.files.filter(f => incPvs.contains(f.partitionValues))
-        else snap.files
-      val matchedFiles: Set[String] =
-        if (candidates.isEmpty) Set.empty
-        else TxLog.readSubset(spark, p, candidates, snap.partitionCols)
-          .withColumn("__file", TxLog.scannedFileName)
-          .join(keys, uniqueKey, "left_semi")
-          .select(col("__file")).distinct().collect().map(_.getString(0)).toSet
-      val removes = candidates.filter(f => matchedFiles.contains(f.path.split('/').last))
-      val survivors =
-        if (removes.isEmpty) None
-        else Some(canonicalCast(name,
-          TxLog.readSubset(spark, p, removes, snap.partitionCols))
-          .join(keys, uniqueKey, "left_anti"))
-      val out = survivors match {
-        case Some(s) => aligned.unionByName(s.select(aligned.columns.toSeq.map(col): _*))
-        case None => aligned
+
+    def overwrite(name: String, out: DataFrame, partitionBy: Seq[String]): Unit =
+      TxLog.overwrite(logPath(name), out, partitionBy)
+
+    /** TxLog.overwrite IS an atomic full replace (tombstone-all + add-new in
+      * one commit) — the log format's native equivalent of the parquet
+      * format's staged rename, with history/time-travel kept. */
+    def replace(name: String, df: DataFrame): Unit = {
+      TxLog.overwrite(logPath(name), df)
+      writeSchema(name, df.schema)
+    }
+
+    def overwritePartitions(name: String, out: DataFrame, partitionBy: Seq[String]): Unit =
+      TxLog.overwritePartitions(logPath(name), out, partitionBy)
+
+    def append(name: String, df: DataFrame, partitionBy: Seq[String]): Unit =
+      TxLog.append(logPath(name), df, partitionBy)
+
+    /** Delta-shaped merge: probe which FILES hold matched keys (key columns
+      * only — column-pruned), tombstone exactly those, re-add their
+      * surviving rows together with the increment, one atomic commit.
+      * Candidate files are manifest-pruned to the increment's partitions
+      * under `incrementPartitionsOnly` (dbt incremental_predicates
+      * analogue). On a concurrency conflict the probe re-runs against the
+      * fresh snapshot. */
+    def merge(name: String, aligned: DataFrame, uniqueKey: Seq[String],
+              partitionBy: Seq[String], incrementPartitionsOnly: Boolean): Unit = {
+      val keys = aligned.select(uniqueKey.map(col): _*).distinct()
+      val incPvs: Set[Map[String, String]] =
+        if (partitionBy.isEmpty) Set.empty
+        else aligned.select(partitionBy.map(col): _*).distinct().collect().map { r =>
+          partitionDir(partitionBy, r).split("/").toSeq.map { seg =>
+            val Array(k, v) = seg.split("=", 2); k -> v
+          }.toMap
+        }.toSet
+      var attempts = 0
+      while (attempts < 5) {
+        attempts += 1
+        val p = logPath(name)
+        val snap = TxLog.snapshot(p)
+        val candidates =
+          if (incrementPartitionsOnly && partitionBy.nonEmpty)
+            snap.files.filter(f => incPvs.contains(f.partitionValues))
+          else snap.files
+        val matchedFiles: Set[String] =
+          if (candidates.isEmpty) Set.empty
+          else TxLog.readSubset(spark, p, candidates, snap.partitionCols)
+            .withColumn("__file", TxLog.scannedFileName)
+            .join(keys, uniqueKey, "left_semi")
+            .select(col("__file")).distinct().collect().map(_.getString(0)).toSet
+        val removes = candidates.filter(f => matchedFiles.contains(f.path.split('/').last))
+        val survivors =
+          if (removes.isEmpty) None
+          else Some(readFiles(name, removes, snap.partitionCols)
+            .join(keys, uniqueKey, "left_anti"))
+        val out = survivors match {
+          case Some(s) => aligned.unionByName(s.select(aligned.columns.toSeq.map(col): _*))
+          case None => aligned
+        }
+        try { TxLog.replaceFiles(p, snap.version, removes.map(_.path), out, partitionBy); return }
+        catch { case _: TxLog.TxConflict if attempts < 5 => () }
       }
-      try { TxLog.replaceFiles(p, snap.version, removes.map(_.path), out, partitionBy); return }
-      catch { case _: TxLog.TxConflict if attempts < 5 => () }
     }
   }
 
@@ -772,6 +790,4 @@ final class Warehouse(val spark: SparkSession, val root: String,
             df
         }
     }
-
-  private def deleteRecursively(p: Path): Unit = TempDirs.deleteTree(p)
 }

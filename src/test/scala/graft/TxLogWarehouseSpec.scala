@@ -98,19 +98,30 @@ class TxLogWarehouseSpec extends SparkSpec {
     assert(hist.size == 2 && hist.last._3 > 0, s"merge should tombstone matched files: $hist")
   }
 
-  test("on_schema_change sync_all_columns applies on the log path") {
+  /** Two runs of `mat`, the second adding a column: the schema policy must
+    * apply identically on both formats. */
+  private def schemaChangeParity(mat: Materialization): Unit = {
     val (pq, lg) = ctxPair()
     def model(withExtra: Boolean) = Model("t_sc",
       c => {
         val base = c.source("default", "region").select($"r_regionkey", $"r_name")
         if (withExtra) base.withColumn("extra", lit(7)) else base
       },
-      Materialization.IncrementalInsertOverwrite(Nil, OnSchemaChange.SyncAllColumns),
-      fileFormat = "delta")
+      mat, fileFormat = "delta")
     runBoth(pq, lg, model(withExtra = false))
     runBoth(pq, lg, model(withExtra = true))
     assertParity(pq, lg, "t_sc")
     assert(lg.warehouse.read("t_sc").columns.contains("extra"))
+  }
+
+  test("on_schema_change sync_all_columns applies on the log path") {
+    schemaChangeParity(
+      Materialization.IncrementalInsertOverwrite(Nil, OnSchemaChange.SyncAllColumns))
+  }
+
+  test("on_schema_change append_new_columns applies to a keyless merge on the log path") {
+    schemaChangeParity(
+      Materialization.IncrementalMerge(Nil, Nil, OnSchemaChange.AppendNewColumns))
   }
 
   test("SCD2 snapshot (the 54 delta snapshots' shape) routes onto the log: " +
@@ -147,5 +158,22 @@ class TxLogWarehouseSpec extends SparkSpec {
     new DagRunner(Seq(m)).materialize(lg, m)
     assert(!lg.warehouse.isLogBacked("t_pq"))
     assert(sortedRows(lg.warehouse.read("t_pq")).size == 5)
+  }
+
+  test("drop forgets the format choice: the name's next table is parquet") {
+    val (_, lg) = ctxPair()
+    def model(fileFormat: String) = Model("t_dr",
+      c => c.source("default", "region").select($"r_regionkey"),
+      Materialization.Table(), fileFormat = fileFormat)
+    new DagRunner(Seq(model("delta"))).materialize(lg, model("delta"))
+    assert(lg.warehouse.isLogBacked("t_dr"))
+    lg.warehouse.drop("t_dr")
+    // an undeclared write after the drop (seeds, direct callers) is parquet
+    lg.warehouse.createTable("t_dr", spark.range(3).toDF("r_regionkey"))
+    assert(!lg.warehouse.isLogBacked("t_dr"))
+    lg.warehouse.drop("t_dr")
+    new DagRunner(Seq(model("parquet"))).materialize(lg, model("parquet"))
+    assert(!lg.warehouse.isLogBacked("t_dr"))
+    assert(sortedRows(lg.warehouse.read("t_dr")).size == 5)
   }
 }
